@@ -10819,7 +10819,7 @@ def src_warc_revisit_dedup(spark, sf_dir):
        md5(text) AS payload_md5
     FROM documents""",
     "WARC-Segment continuation reassembly (ISO 28500 §5.18-5.20; r13 "
-    "response-walk extension, sources/warc.py _walk_response_records): "
+    "response-walk extension, sources/warc.py _assemble): "
     "records over a crawl writer's size ceiling ship SPLIT across a "
     "first record carrying WARC-Segment-Number: 1 and consecutive "
     "continuation records citing it via WARC-Segment-Origin-ID, the "

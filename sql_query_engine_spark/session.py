@@ -55,22 +55,27 @@ def local_df(spark: SparkSession, rows, schema: str):
     # turn an int column with a None into float NaN, and numpy scalars
     # or out-of-range ints would coerce without the row-by-row
     # validation plain createDataFrame performs): literal tables are
-    # small, so the full check costs microseconds
-    assert not pdf.isna().any().any(), (
-        "local_df rows must be NULL-free (pandas coerces int+None to "
-        "float); use plain createDataFrame for nullable literals"
-    )
+    # small, so the full check costs microseconds. A raise, not an
+    # assert: ``python -O`` strips asserts.
+    if pdf.isna().any().any():
+        raise ValueError(
+            "local_df rows must be NULL-free (pandas coerces int+None to "
+            "float); use plain createDataFrame for nullable literals"
+        )
     return spark.createDataFrame(pdf, schema)
 
 
 def default_parallelism() -> int:
-    """Worker-thread count for local mode; honours SPARK_GRAFT_CPUS."""
+    """Worker-thread count for local mode; honours SPARK_GRAFT_CPUS,
+    which must be an integer when set."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
     if env:
         try:
             return max(1, int(env))
         except ValueError:
-            pass
+            raise ValueError(
+                f"SPARK_GRAFT_CPUS must be an integer, got {env!r}"
+            ) from None
     return os.cpu_count() or 8
 
 
@@ -160,13 +165,20 @@ def get_spark(
     # Environment passthrough (SPARK_GRAFT_CONF="k=v;k=v"): lets a
     # submitter or an A/B harness override any default above without
     # editing source — the same parameterization a cluster submit would
-    # use. Applied after the defaults, before caller extra_conf.
+    # use. Applied after the defaults, before caller extra_conf. Items
+    # split on ';', so a value cannot contain ';'; an item without '='
+    # raises rather than being silently dropped.
     env_conf = os.environ.get("SPARK_GRAFT_CONF", "")
     for item in env_conf.split(";"):
         item = item.strip()
-        if item and "=" in item:
-            k, _, v = item.partition("=")
-            builder = builder.config(k.strip(), v.strip())
+        if not item:
+            continue
+        k, sep, v = item.partition("=")
+        if not sep:
+            raise ValueError(
+                f"SPARK_GRAFT_CONF item {item!r} is not key=value"
+            )
+        builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -15,20 +15,48 @@ Format essentials implemented here (ISO 28500 / WARC 1.0):
 * A blank line (``\\r\\n``) separates headers from the payload block.
 * Two CRLFs terminate the record; the next record follows immediately.
 
-Scale shape: one ``.warc``/``.warc.gz`` file per partition is written
-executor-side. The legacy ``.warc`` read is a ``binaryFile`` scan +
-Arrow ``mapInPandas`` record walk; the ``.warc.gz`` scale paths (batch
-readers since r13, the Structured Streaming landing tail since r14)
-never hold shard bytes JVM-side — workers STREAM each shard through
-the O(member)-memory gzip walker (:func:`iter_gzip_members_stream`),
-so per-task footprint is shard-size-independent. Per-file independent,
-nothing driver-side, exactly the Avro source's plan. Malformed records
+ONE record walk serves every ``.warc.gz`` reader: :func:`_records`
+streams any ``.read()``-able through the O(member)-memory gzip walker
+(:func:`iter_gzip_members_stream`), the WARC framing + block-digest
+check (:func:`decode_warc_bytes`) and segment reassembly
+(:func:`_assemble`), and yields every LOGICAL record once, of every
+WARC-Type. A plane keeps the records of the WARC-Type(s) it wants and
+turns each into one row; :func:`_scan` runs a plane over shard paths
+(one task per shard, bounded Arrow batches) and :func:`_try` runs the
+SAME plane over one shard's bytes for the fuzz contract (None on any
+defect, never a raise), so each wrapper returns exactly its reader's
+rows:
+
+reader                          WARC-Type           schema
+  its fuzz wrapper
+------------------------------  ------------------  -------------------
+read_warc_gz                    response            _RESPONSE_SCHEMA
+  try_scan_warc_gz
+read_warc_gz_stream             response            _RESPONSE_SCHEMA
+  (streaming tail of read_warc_gz; same wrapper)
+read_warc_gz_meta               response            _META_SCHEMA
+  try_scan_warc_gz_meta
+read_warc_revisits              revisit             _REVISIT_SCHEMA
+  try_scan_warc_revisits
+read_warc_requests              request             _REQUEST_SCHEMA
+  try_scan_warc_requests
+read_warc_revisit_resolution    response + revisit  _RESOLUTION_SCHEMA
+  try_scan_warc_revisit_resolution
+
+:func:`write_wat_sidecar` walks the response records of each shard the
+same way, and :func:`fetch_warc_members` / :func:`try_fetch_extent`
+walk one CDX extent's bytes through :func:`_records`. Every shard is
+read by a Python worker from its path, so the JVM never holds shard
+bytes and per-task memory is shard-size-independent. Malformed records
 raise with the offending path (attributable ingest failures), matching
-the Avro convention.
+the Avro convention. The plain ``.warc`` reader (:func:`read_warc`) is
+the legacy whole-file walk: same framing and segment rules, no gzip.
 """
 
 from __future__ import annotations
 
+import io
+import itertools
 import os
 from collections.abc import Iterator
 
@@ -172,11 +200,10 @@ def write_warc_bytes(records: list[tuple[int, str]]) -> bytes:
     return b"".join(build_warc_record(d, t) for d, t in records)
 
 
-def decode_warc_bytes(payload: bytes, path: str = "<bytes>",
-                      with_headers: bool = False):
+def decode_warc_bytes(payload: bytes, path: str = "<bytes>"):
     """Walk one WARC file → [(doc_id, target_uri, content_length,
-    payload_bytes)] (plus the header dict per record when
-    ``with_headers``). Raises ValueError with the path on any framing
+    payload_bytes, headers)], ``headers`` the lowercased-name dict of
+    the record's named fields. Raises ValueError with the path on any framing
     defect: bad version line, missing Content-Length, truncated
     payload, or missing record terminator. When a record carries a
     ``WARC-Block-Digest`` with a label this engine can recompute
@@ -254,10 +281,7 @@ def decode_warc_bytes(payload: bytes, path: str = "<bytes>",
         tail = rid.rstrip(">").rsplit("-", 1)[-1]
         if tail.isdigit():
             doc_id = int(tail)
-        if with_headers:
-            recs.append((doc_id, uri, n, body, headers))
-        else:
-            recs.append((doc_id, uri, n, body))
+        recs.append((doc_id, uri, n, body, headers))
     return recs
 
 
@@ -283,37 +307,46 @@ _GZ_MAX_MEMBER_BYTES = 256 * 1024 * 1024  # inflation ceiling per member
 _GZ_MAX_HEADER_FIELD = 64 * 1024
 
 
-def _is_response(headers: dict) -> bool:
-    """True when a record's WARC-Type is ``response`` (or absent — the
-    permissive default for minimal files). Real crawl WARCs interleave
-    warcinfo / request / metadata records with the responses; only
-    responses carry an HTTP message, so every reader that parses
-    blocks as HTTP must skip the rest instead of rejecting the file."""
-    return headers.get(
-        b"warc-type", b"response").strip().lower() == b"response"
+def _close_chain(seg: dict, total_raw: bytes, path: str):
+    """Close an open segmented record on the segment declaring
+    WARC-Segment-Total-Length → the assembled logical record, or a
+    raise when the declared total disagrees with the assembled bytes."""
+    try:
+        total = int(total_raw)
+    except ValueError:
+        raise ValueError(f"{path}: non-numeric WARC-Segment-Total-Length")
+    block = b"".join(seg["parts"])
+    if len(block) != total:
+        raise ValueError(
+            f"{path}: WARC-Segment-Total-Length {total} != assembled "
+            f"{len(block)} bytes for {seg['origin']!r}")
+    return seg["t"], seg["d"], seg["u"], len(block), block, seg["headers"]
 
 
-def _walk_response_records(records, path: str):
-    """The decode-then-skip loop every HTTP-parsing reader shares, over
-    an already-decoded record stream: yield (doc_id, uri,
-    content_length, block, headers) for RESPONSE records — warcinfo /
-    request / metadata / revisit records are data to skip, not defects
-    — with SEGMENTED records (ISO 28500 §5.18-5.20: WARC-Segment-Number
-    on the first record, ``continuation`` records carrying
+def _assemble(records, path: str):
+    """Segment reassembly over a decoded record stream: yield
+    (wtype, doc_id, uri, content_length, block, headers) ONCE per
+    LOGICAL record, whatever its WARC-Type — ``wtype`` is the
+    lowercased WARC-Type, ``response`` when absent (the permissive
+    default for minimal files). Real crawl WARCs interleave warcinfo /
+    request / metadata / revisit records with the responses; each is
+    data for the plane that wants it, never a defect.
+
+    SEGMENTED records (ISO 28500 §5.18-5.20: WARC-Segment-Number on
+    the first record, ``continuation`` records carrying
     WARC-Segment-Origin-ID, the last one WARC-Segment-Total-Length)
-    REASSEMBLED in stream order. Records over the writer's record-size
-    ceiling ship segmented in real corpora, so a reader that rejects
-    them drops exactly the largest documents. Reassembly rules, each
-    violation an attributable raise, never a silent drop: the first
-    segment is number 1; continuations must follow consecutively,
-    cite the origin record id, and not interleave with other records;
-    the declared total length must equal the assembled byte count; a
-    stream ending mid-segment is truncated. A FIRST segment that itself
-    declares WARC-Segment-Total-Length is a complete single-segment
-    chain (an edge shape for external files — ISO 28500 implies >=2
-    segments) and closes immediately, validated against its own block
-    length. A segmented NON-response record (e.g. a huge metadata
-    record) is skipped as a whole chain.
+    are REASSEMBLED in stream order, for every WARC-Type. Records over
+    the writer's record-size ceiling ship segmented in real corpora,
+    so a reader that rejects them drops exactly the largest documents.
+    Reassembly rules, each violation an attributable raise, never a
+    silent drop: the first segment is number 1; continuations must
+    follow consecutively, cite the origin record id, and not
+    interleave with other records; the declared total length must
+    equal the assembled byte count; a stream ending mid-segment is
+    truncated. A FIRST segment that itself declares
+    WARC-Segment-Total-Length is a complete single-segment chain (an
+    edge shape for external files — ISO 28500 implies >=2 segments)
+    and closes immediately, validated against its own block length.
     Per-segment block digests were already verified record-by-record
     in :func:`decode_warc_bytes`."""
     seg = None  # open segmented record: dict, or None
@@ -341,102 +374,65 @@ def _walk_response_records(records, path: str):
                     f"{path}: segment {segno} out of order (expected "
                     f"{seg['next']}) for {seg['origin']!r}")
             seg["next"] += 1
-            if not seg["skip"]:
-                seg["parts"].append(block)
+            seg["parts"].append(block)
             total_raw = wh.get(b"warc-segment-total-length")
-            if total_raw is None:
-                continue
-            # the record carrying Total-Length is the last segment
-            try:
-                total = int(total_raw)
-            except ValueError:
-                raise ValueError(
-                    f"{path}: non-numeric WARC-Segment-Total-Length")
-            done, seg = seg, None
-            if done["skip"]:
-                continue
-            assembled = b"".join(done["parts"])
-            if len(assembled) != total:
-                raise ValueError(
-                    f"{path}: WARC-Segment-Total-Length {total} != "
-                    f"assembled {len(assembled)} bytes for "
-                    f"{done['origin']!r}")
-            yield done["d"], done["u"], len(assembled), assembled, \
-                done["headers"]
+            if total_raw is not None:
+                # the record carrying Total-Length is the last segment
+                done, seg = seg, None
+                yield _close_chain(done, total_raw, path)
             continue
         if seg is not None:
             raise ValueError(
                 f"{path}: record interleaves an open segmented record "
                 f"({seg['origin']!r} still unterminated)")
-        if segno_raw is not None:
-            try:
-                segno = int(segno_raw)
-            except ValueError:
-                raise ValueError(
-                    f"{path}: non-numeric WARC-Segment-Number (doc {d})")
-            if segno != 1:
-                raise ValueError(
-                    f"{path}: first record of a segmented chain has "
-                    f"WARC-Segment-Number {segno}, expected 1 (doc {d})")
-            origin = wh.get(b"warc-record-id", b"").strip()
-            if not origin:
-                raise ValueError(
-                    f"{path}: segmented record without a WARC-Record-ID "
-                    f"(continuations could never cite it; doc {d})")
-            seg = {"d": d, "u": u, "parts": [block], "next": 2,
-                   "origin": origin, "headers": wh,
-                   "skip": not _is_response(wh)}
-            total_raw = wh.get(b"warc-segment-total-length")
-            if total_raw is not None:
-                # single-segment chain: the FIRST record also declares
-                # Total-Length, so the chain is complete here (ISO
-                # 28500 implies >=2 segments, but an external writer
-                # that emits this shape is describing a whole record —
-                # without this close, the next unrelated record would
-                # raise "interleaves an open segmented record",
-                # blaming the wrong record for the defect)
-                try:
-                    total = int(total_raw)
-                except ValueError:
-                    raise ValueError(
-                        f"{path}: non-numeric WARC-Segment-Total-Length")
-                done, seg = seg, None
-                if done["skip"]:
-                    continue
-                if len(block) != total:
-                    raise ValueError(
-                        f"{path}: WARC-Segment-Total-Length {total} != "
-                        f"assembled {len(block)} bytes for "
-                        f"{done['origin']!r}")
-                yield d, u, len(block), block, wh
+        if segno_raw is None:
+            yield wtype, d, u, n, block, wh
             continue
-        if _is_response(wh):
-            yield d, u, n, block, wh
+        try:
+            segno = int(segno_raw)
+        except ValueError:
+            raise ValueError(
+                f"{path}: non-numeric WARC-Segment-Number (doc {d})")
+        if segno != 1:
+            raise ValueError(
+                f"{path}: first record of a segmented chain has "
+                f"WARC-Segment-Number {segno}, expected 1 (doc {d})")
+        origin = wh.get(b"warc-record-id", b"").strip()
+        if not origin:
+            raise ValueError(
+                f"{path}: segmented record without a WARC-Record-ID "
+                f"(continuations could never cite it; doc {d})")
+        seg = {"t": wtype, "d": d, "u": u, "parts": [block], "next": 2,
+               "origin": origin, "headers": wh}
+        total_raw = wh.get(b"warc-segment-total-length")
+        if total_raw is not None:
+            # single-segment chain: the FIRST record also declares
+            # Total-Length, so the chain is complete here (ISO 28500
+            # implies >=2 segments, but an external writer that emits
+            # this shape is describing a whole record — without this
+            # close, the next unrelated record would raise "interleaves
+            # an open segmented record", blaming the wrong record)
+            done, seg = seg, None
+            yield _close_chain(done, total_raw, path)
     if seg is not None:
         raise ValueError(
             f"{path}: stream ends inside segmented record "
             f"{seg['origin']!r} (expected segment {seg['next']})")
 
 
-def _iter_response_records(member: bytes, path: str):
-    """Single-stream wrapper over :func:`_walk_response_records` — one
-    .warc file or one gzip member's bytes in, assembled response
-    records out."""
-    yield from _walk_response_records(
-        decode_warc_bytes(member, path, with_headers=True), path)
-
-
-def _iter_gz_responses(content: bytes, path: str):
-    """File-scope response walk for .warc.gz: records are one-per-gzip-
-    member, but a SEGMENTED logical record spans consecutive members,
-    so the segment state must live at file scope — decode all members
-    into one record stream, then run the shared response walk over
-    it."""
-    def _records():
-        for member in split_gzip_members(content, path):
-            yield from decode_warc_bytes(member, path, with_headers=True)
-
-    yield from _walk_response_records(_records(), path)
+def _records(f, path: str):
+    """THE record walk of every .warc.gz reader, over any
+    ``.read()``-able (an open shard, or ``io.BytesIO`` over one
+    shard's or one CDX extent's bytes): streaming gzip member walk →
+    WARC framing + block digests → segment reassembly, yielding
+    :func:`_assemble`'s (wtype, doc_id, uri, content_length, block,
+    headers) per logical record. A segmented logical record spans
+    consecutive members, so the segment state lives at file scope.
+    Memory is O(one member + one read chunk) — O(one chain) inside a
+    segmented record — never O(shard)."""
+    return _assemble(
+        (rec for member in iter_gzip_members_stream(f, path)
+         for rec in decode_warc_bytes(member, path)), path)
 
 
 def gzip_member(payload: bytes, fname: bytes | None = None,
@@ -1051,14 +1047,13 @@ def _content_decode(body: bytes, headers: dict, path: str) -> bytes:
     raise ValueError(f"{path}: unsupported Content-Encoding {ce!r}")
 
 
-def _payload_digest_verdict(wh: dict, body: bytes, path: str,
-                            doc_id: int) -> tuple[str | None, bool | None]:
-    """The labelled WARC-Payload-Digest verdict shared by the meta
-    reader and its fuzz wrapper: → (sha256_hex_or_None,
-    verified_True/False/None). A known-label value that parses as
-    neither hex nor Base32 raises (malformed ≠ mismatched)."""
-    import hashlib
-
+def _payload_digest(wh: dict, path: str, doc_id: int):
+    """The record's labelled WARC-Payload-Digest → (alg, raw digest
+    bytes), or (None, None) when it declares nothing this engine can
+    recompute. A known-label value that parses as neither hex nor
+    Base32 raises (malformed ≠ mismatched): on a revisit record the
+    digest is dedup's JOIN KEY, and a silently-NULL garbled key would
+    drop the re-crawl observation without a trace."""
     decl = wh.get(b"warc-payload-digest")
     if decl is None:
         return None, None
@@ -1074,119 +1069,54 @@ def _payload_digest_verdict(wh: dict, body: bytes, path: str,
         raise ValueError(
             f"{path}: malformed WARC-Payload-Digest value for {alg} "
             f"(doc {doc_id})")
-    digest = raw.hex() if alg == "sha256" else None
-    return digest, hashlib.new(alg, body).digest() == raw
+    return alg, raw
 
 
-def try_scan_warc_gz(payload: bytes):
-    """Fuzz-contract wrapper over the full three-layer scan (gzip
-    members → WARC records → HTTP responses): returns the framing
-    census rows, or None on any defect — never raises. The SOURCE path
-    (read_warc_gz) deliberately raises instead: an ingest failure must
-    be attributable, whereas the fuzz contract is reject-never-crash."""
-    try:
-        rows = []
-        for d, u, _n, block, _wh in _iter_gz_responses(payload, "<bytes>"):
-            st, body, k = parse_http_response(block)
-            rows.append((d, u, st, k, len(body)))
-        return rows
-    except ValueError:
-        return None
+def _sha256_hex(wh: dict, path: str, doc_id: int) -> str | None:
+    """The declared payload digest normalized to hex when its label is
+    sha256 (other known labels surface NULL in a sha256 column)."""
+    alg, raw = _payload_digest(wh, path, doc_id)
+    return raw.hex() if alg == "sha256" else None
 
 
-def try_scan_warc_gz_meta(payload: bytes):
-    """Fuzz-contract wrapper over the metadata plane (the digest-
-    verdict path of :func:`read_warc_gz_meta`): returns [(doc_id,
-    status, payload_sha256, digest_verified)], or None on any framing
-    defect — never raises. The key contract under digest-value
-    mutation: a flipped declared digest must surface as None
-    (malformed) or a ``digest_verified is False`` row — NEVER as a
-    silently-True verdict."""
-    try:
-        rows = []
-        for d, _u, _n, block, wh in _iter_gz_responses(payload, "<bytes>"):
-            st, hh, body, _k = parse_http_response_ex(block, "<bytes>")
-            digest, verified = _payload_digest_verdict(
-                wh, body, "<bytes>", d)
-            rows.append((d, st, digest, verified))
-        return rows
-    except ValueError:
-        return None
+# -------------------------------------------------------------------------
+# Planes: each maps the WARC-Type(s) it reads to a row function
+# (doc_id, uri, block, headers, path) → one row of its reader's schema.
+# The Spark readers (_scan) and the fuzz wrappers (_try) run the same
+# plane over the same walk (_records).
+# -------------------------------------------------------------------------
 
 
-def _revisit_row(wh: dict, path: str, doc_id: int):
-    """One revisit record's reference columns, shared by the Spark
-    reader and its fuzz wrapper (so the soak exercises the exact code
-    the reader runs): → (refers_to_uri, refers_to_id, sha256_hex,
-    profile). A malformed known-label digest value RAISES — same
-    'garbled is a defect, not license to skip' contract as the block
-    and response-payload digest checks; the digest is dedup's join
-    key, and a silently-NULL garbled key would drop the re-crawl
-    observation without a trace."""
-    digest = None
-    decl = wh.get(b"warc-payload-digest")
-    if decl is not None:
-        alg, _, val = decl.partition(b":")
-        try:
-            alg_s = alg.strip().lower().decode("ascii")
-        except UnicodeDecodeError:
-            alg_s = None
-        if alg_s in _DIGEST_SIZES:
-            raw = _decode_labelled_digest(alg_s, val)
-            if raw is None:
-                raise ValueError(
-                    f"{path}: malformed WARC-Payload-Digest value for "
-                    f"{alg_s} on revisit record (doc {doc_id})")
-            if alg_s == "sha256":
-                digest = raw.hex()
-    return (
-        wh.get(b"warc-refers-to-target-uri", b"").decode() or None,
-        wh.get(b"warc-refers-to", b"").decode() or None,
-        digest,
-        wh.get(b"warc-profile", b"").decode() or None,
-    )
+def _response_row(d: int, u: str, block: bytes, _wh: dict, path: str):
+    st, hh, body, k = parse_http_response_ex(block, path)
+    return d, u, st, k, len(body), _entity_text(body, hh)
 
 
-def _typed_member_rows(payload: bytes, wtype: bytes, row_fn):
-    """Decode every member of ``payload`` and extract ``row_fn`` rows
-    from the records of one WARC-Type — the loop both typed-plane
-    fuzz wrappers share (the Spark readers run the same filter+extract
-    over the streaming walk via :func:`_scan_typed_records`)."""
-    rows = []
-    for member in split_gzip_members(payload, "<bytes>"):
-        for d, u, _n, block, wh in decode_warc_bytes(
-                member, "<bytes>", with_headers=True):
-            if wh.get(b"warc-type", b"").strip().lower() != wtype:
-                continue
-            rows.append(row_fn(d, u, block, wh, "<bytes>"))
-    return rows
+def _meta_row(d: int, u: str, block: bytes, wh: dict, path: str):
+    """Digest verdict: TRUE/FALSE when the declared payload digest was
+    recomputed over the decoded entity, NULL when nothing recomputable
+    is declared (see :func:`read_warc_gz_meta`)."""
+    import hashlib
+
+    st, hh, body, _k = parse_http_response_ex(block, path)
+    alg, raw = _payload_digest(wh, path, d)
+    verified = None if raw is None else hashlib.new(alg, body).digest() == raw
+    return (d, u, st, len(body), _charset_of(hh), _entity_text(body, hh),
+            raw.hex() if alg == "sha256" else None, verified)
 
 
-def _revisit_plane_row(d, u, _block, wh, path):
-    return (d, u) + _revisit_row(wh, path, d)
+def _revisit_row(d: int, u: str, _block: bytes, wh: dict, path: str):
+    return (d, u,
+            wh.get(b"warc-refers-to-target-uri", b"").decode() or None,
+            wh.get(b"warc-refers-to", b"").decode() or None,
+            _sha256_hex(wh, path, d),
+            wh.get(b"warc-profile", b"").decode() or None)
 
 
-def try_scan_warc_revisits(payload: bytes):
-    """Fuzz-contract wrapper over the revisit plane (the same
-    :func:`_revisit_row` extraction the Spark reader runs): returns
-    [(doc_id, target_uri, refers_to_uri, refers_to_id, payload_sha256,
-    profile)] for revisit records, or None on any framing defect —
-    never raises (UnicodeDecodeError subclasses ValueError)."""
-    try:
-        return _typed_member_rows(payload, b"revisit", _revisit_plane_row)
-    except ValueError:
-        return None
-
-
-def _request_record_row(d: int, u: str, block: bytes, wh: dict,
-                        path: str):
-    """One reader row from a decoded ``request`` record — shared by
-    the Spark scan and its fuzz wrapper: (doc_id, target_uri, method,
-    request_target, http_version, user_agent, body_len, n_chunks,
-    concurrent_to). A malformed client message is a framing defect
-    (raise), not data — the request plane is provenance, and a
-    silently-dropped or half-parsed request would misattribute what
-    the crawler actually sent."""
+def _request_row(d: int, u: str, block: bytes, wh: dict, path: str):
+    """A malformed client message is a framing defect (raise), not
+    data — the request plane is provenance, and a silently-dropped or
+    half-parsed request would misattribute what the crawler sent."""
     method, target, version, hh, body, k = parse_http_request_ex(
         block, path)
     ua = hh.get(b"user-agent")
@@ -1196,16 +1126,81 @@ def _request_record_row(d: int, u: str, block: bytes, wh: dict,
             wh.get(b"warc-concurrent-to", b"").decode() or None)
 
 
-def try_scan_warc_requests(payload: bytes):
-    """Fuzz-contract wrapper over the request plane (the same
-    :func:`_request_record_row` extraction the Spark reader runs):
-    returns [(doc_id, target_uri, method, request_target,
-    http_version, user_agent, body_len, n_chunks, concurrent_to)] for
-    request records, or None on any framing defect — never raises."""
+def _resolved_response_row(d: int, u: str, block: bytes, wh: dict,
+                           path: str):
+    # the strict HTTP parse runs (a framing defect raises as in the
+    # meta plane); the entity is not needed beyond that
+    parse_http_response_ex(block, path)
+    return d, "response", u, None, _sha256_hex(wh, path, d)
+
+
+def _resolved_revisit_row(d: int, u: str, block: bytes, wh: dict,
+                          path: str):
+    _d, _u, ref_uri, _rid, digest, _prof = _revisit_row(
+        d, u, block, wh, path)
+    return d, "revisit", u, ref_uri, digest
+
+
+_PLANES = {
+    "response": {b"response": _response_row},
+    "meta": {b"response": _meta_row},
+    "revisit": {b"revisit": _revisit_row},
+    "request": {b"request": _request_row},
+    "resolution": {b"response": _resolved_response_row,
+                   b"revisit": _resolved_revisit_row},
+}
+
+
+def _plane_rows(plane: str, f, path: str):
+    """One plane's rows over one shard's record walk, in stream order."""
+    row_fns = _PLANES[plane]
+    for wtype, d, u, _n, block, wh in _records(f, path):
+        fn = row_fns.get(wtype)
+        if fn is not None:
+            yield fn(d, u, block, wh, path)
+
+
+def _try(plane: str, payload: bytes):
+    """The fuzz contract over one plane: exactly its reader's rows for
+    one shard's bytes, or None on any defect — never raises
+    (UnicodeDecodeError subclasses ValueError). The Spark readers
+    raise instead: an ingest failure must be attributable, whereas the
+    fuzz contract is reject-never-crash."""
     try:
-        return _typed_member_rows(payload, b"request", _request_record_row)
+        return list(_plane_rows(plane, io.BytesIO(payload), "<bytes>"))
     except ValueError:
         return None
+
+
+def try_scan_warc_gz(payload: bytes):
+    """:func:`read_warc_gz`'s rows for one shard's bytes, or None."""
+    return _try("response", payload)
+
+
+def try_scan_warc_gz_meta(payload: bytes):
+    """:func:`read_warc_gz_meta`'s rows for one shard's bytes, or None.
+    Under digest-value mutation a flipped declared digest surfaces as
+    None (malformed) or a ``digest_verified is False`` row — NEVER as a
+    silently-True verdict."""
+    return _try("meta", payload)
+
+
+def try_scan_warc_revisits(payload: bytes):
+    """:func:`read_warc_revisits`'s rows for one shard's bytes, or
+    None."""
+    return _try("revisit", payload)
+
+
+def try_scan_warc_requests(payload: bytes):
+    """:func:`read_warc_requests`'s rows for one shard's bytes, or
+    None."""
+    return _try("request", payload)
+
+
+def try_scan_warc_revisit_resolution(payload: bytes):
+    """:func:`read_warc_revisit_resolution`'s rows for one shard's
+    bytes, or None."""
+    return _try("resolution", payload)
 
 
 # ISO 28500 §6.7.2: the revisit profile URI declaring "same payload as
@@ -1507,21 +1502,17 @@ def _fetch_extent_row(raw: bytes, where: str):
     Anything else in the extent is an attributable index defect, and a
     PARTIAL chain fails the reassembly walk (truncation /
     orphan-continuation raises) — never a silently-short row."""
-    members = split_gzip_members(raw, where)
-    recs = [r for m in members
-            for r in decode_warc_bytes(m, where, with_headers=True)]
-    for _d, _u, _n2, _b, wh in recs:
-        wtype = wh.get(b"warc-type", b"response").strip().lower()
-        if wtype not in (b"response", b"continuation"):
+    recs = list(_records(io.BytesIO(raw), where))
+    for wtype, *_ in recs:
+        if wtype != b"response":
             raise ValueError(
                 f"{where}: indexed extent holds a non-response record "
                 f"(WARC-Type={wtype.decode()})")
-    resp = list(_walk_response_records(iter(recs), where))
-    if len(resp) != 1:
+    if len(recs) != 1:
         raise ValueError(
-            f"{where}: indexed extent yields {len(resp)} logical "
+            f"{where}: indexed extent yields {len(recs)} logical "
             f"responses (the CDX contract is exactly one)")
-    d, u, _n, block, wh = resp[0]
+    _t, d, u, _n, block, _wh = recs[0]
     st, hh, body, _k = parse_http_response_ex(block, where)
     return (d, u, st, len(body), _entity_text(body, hh))
 
@@ -1551,15 +1542,9 @@ def fetch_warc_members(index: DataFrame, base_dir: str) -> DataFrame:
     request). Extent defects (members not ending exactly at
     offset+length, non-response records, partial chains, or any
     framing violation inside) raise with shard and offset."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("http_status", LongType(), True),
-            StructField("content_length", LongType(), True),
-            StructField("text", StringType(), True),
-        ]
-    )
+    schema = _schema(
+        "doc_id long, target_uri string, http_status long, "
+        "content_length long, text string")
 
     def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1586,9 +1571,7 @@ def fetch_warc_members(index: DataFrame, base_dir: str) -> DataFrame:
             finally:
                 for f in handles.values():
                     f.close()
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "target_uri", "http_status",
-                               "content_length", "text"])
+            yield pd.DataFrame(rows, columns=schema.fieldNames())
 
     return index.select("shard", "offset", "length").mapInPandas(
         _fetch, schema)
@@ -1713,6 +1696,36 @@ def _entity_text(body: bytes, headers: dict | None = None) -> str | None:
 # pandas/Arrow high-water mark per task regardless of shard row count
 _SCAN_BATCH_ROWS = 8192
 
+_TYPES = {"long": LongType(), "string": StringType(),
+          "boolean": BooleanType()}
+
+
+def _schema(ddl: str) -> StructType:
+    """``"name type, ..."`` → the all-nullable StructType a reader
+    emits (module-level constants need it before any session exists,
+    so Spark's own DDL parser is not available)."""
+    return StructType([StructField(n, _TYPES[t], True)
+                       for n, t in (c.split() for c in ddl.split(","))])
+
+
+_RESPONSE_SCHEMA = _schema(
+    "doc_id long, target_uri string, http_status long, n_chunks long, "
+    "content_length long, text string")
+_META_SCHEMA = _schema(
+    "doc_id long, target_uri string, http_status long, "
+    "content_length long, charset string, text string, "
+    "payload_sha256 string, digest_verified boolean")
+_REVISIT_SCHEMA = _schema(
+    "doc_id long, target_uri string, refers_to_uri string, "
+    "refers_to_id string, payload_sha256 string, profile string")
+_REQUEST_SCHEMA = _schema(
+    "doc_id long, target_uri string, method string, "
+    "request_target string, http_version string, user_agent string, "
+    "body_len long, n_chunks long, concurrent_to string")
+_RESOLUTION_SCHEMA = _schema(
+    "doc_id long, wtype string, target_uri string, refers_to_uri string, "
+    "payload_sha256 string")
+
 # shard listings up to this size ride a range+array-literal relation
 # (no Python RDD, no exchange); larger listings fall back to
 # createDataFrame so plan trees stay bounded.
@@ -1767,17 +1780,27 @@ def _shard_paths_df(spark: SparkSession, path_glob: str) -> DataFrame:
     return df.repartition(len(paths))
 
 
-def _iter_file_responses(path: str):
-    """Open one shard and yield its assembled response records via the
-    streaming member walk — memory O(member + chunk), never O(shard)."""
-    with open(path, "rb") as f:
+def _scan(files: DataFrame, plane: str, schema: StructType) -> DataFrame:
+    """Run one plane over every shard of a ``path`` listing: each task
+    opens its shard (a local path or ``file:`` URI), streams it
+    through :func:`_records` with O(member) memory, and emits the
+    plane's rows in Arrow batches of at most ``_SCAN_BATCH_ROWS``, so
+    the pandas/Arrow high-water mark per task is bounded regardless of
+    shard row count. Only ``path`` is projected, so a binaryFile
+    listing never reads shard content JVM-side."""
+    cols = schema.fieldNames()
 
-        def _records():
-            for member in iter_gzip_members_stream(f, path):
-                yield from decode_warc_bytes(member, path,
-                                             with_headers=True)
+    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for uri in pdf["path"]:
+                path = _local_path_of(uri)
+                with open(path, "rb") as f:
+                    rows = _plane_rows(plane, f, path)
+                    while batch := list(
+                            itertools.islice(rows, _SCAN_BATCH_ROWS)):
+                        yield pd.DataFrame(batch, columns=cols)
 
-        yield from _walk_response_records(_records(), path)
+    return files.select("path").mapInPandas(_dec, schema)
 
 
 def read_warc_gz(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -1789,36 +1812,8 @@ def read_warc_gz(spark: SparkSession, path_glob: str) -> DataFrame:
     shard, per-task memory O(member), shard-size-INDEPENDENT (see
     :func:`_shard_paths_df` for why binaryFile is not used); rows flow
     out in bounded Arrow batches."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("http_status", LongType(), True),
-            StructField("n_chunks", LongType(), True),
-            StructField("content_length", LongType(), True),
-            StructField("text", StringType(), True),
-        ]
-    )
-    files = _shard_paths_df(spark, path_glob)
-    cols = ["doc_id", "target_uri", "http_status",
-            "n_chunks", "content_length", "text"]
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                rows = []
-                for d, u, _n, block, _wh in _iter_file_responses(path):
-                    st, hh, body, k = parse_http_response_ex(
-                        block, path)
-                    rows.append((d, u, st, k, len(body),
-                                 _entity_text(body, hh)))
-                    if len(rows) >= _SCAN_BATCH_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(_dec, schema)
+    return _scan(_shard_paths_df(spark, path_glob), "response",
+                 _RESPONSE_SCHEMA)
 
 
 def read_warc_gz_meta(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -1847,41 +1842,7 @@ def read_warc_gz_meta(spark: SparkSession, path_glob: str) -> DataFrame:
     parameter; text is NULL when the label is unknown or the bytes
     don't strictly decode. Map-only, one task per shard, streaming
     member walk — per-task memory O(member), shard-size-independent."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("http_status", LongType(), True),
-            StructField("content_length", LongType(), True),
-            StructField("charset", StringType(), True),
-            StructField("text", StringType(), True),
-            StructField("payload_sha256", StringType(), True),
-            StructField("digest_verified", BooleanType(), True),
-        ]
-    )
-    files = _shard_paths_df(spark, path_glob)
-    cols = ["doc_id", "target_uri", "http_status", "content_length",
-            "charset", "text", "payload_sha256", "digest_verified"]
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                rows = []
-                for d, u, _n, block, wh in _iter_file_responses(path):
-                    st, hh, body, _k = parse_http_response_ex(
-                        block, path)
-                    digest, verified = _payload_digest_verdict(
-                        wh, body, path, d)
-                    rows.append(
-                        (d, u, st, len(body), _charset_of(hh),
-                         _entity_text(body, hh), digest, verified))
-                    if len(rows) >= _SCAN_BATCH_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(_dec, schema)
+    return _scan(_shard_paths_df(spark, path_glob), "meta", _META_SCHEMA)
 
 
 def read_warc_revisits(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -1899,20 +1860,8 @@ def read_warc_revisits(spark: SparkSession, path_glob: str) -> DataFrame:
     Map-only, one task per shard, streaming member walk (per-task
     memory O(member)); the response readers SKIP revisit records, so
     the two scans partition the record stream cleanly."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("refers_to_uri", StringType(), True),
-            StructField("refers_to_id", StringType(), True),
-            StructField("payload_sha256", StringType(), True),
-            StructField("profile", StringType(), True),
-        ]
-    )
-    cols = ["doc_id", "target_uri", "refers_to_uri",
-            "refers_to_id", "payload_sha256", "profile"]
-    return _scan_typed_records(spark, path_glob, b"revisit",
-                               _revisit_plane_row, schema, cols)
+    return _scan(_shard_paths_df(spark, path_glob), "revisit",
+                 _REVISIT_SCHEMA)
 
 
 def read_warc_revisit_resolution(spark: SparkSession,
@@ -1927,126 +1876,12 @@ def read_warc_revisit_resolution(spark: SparkSession,
     the two readers: response rows pass through the same segment-
     reassembly walk, strict HTTP parse and labelled-digest verdict the
     metadata reader runs (any framing defect raises identically), and
-    revisit rows run the same :func:`_revisit_row` extraction off the
-    raw record stream (malformed known-label digests raise). Map-only,
-    one task per shard, O(member) memory."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("wtype", StringType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("refers_to_uri", StringType(), True),
-            StructField("payload_sha256", StringType(), True),
-        ]
-    )
-    files = _shard_paths_df(spark, path_glob)
-    cols = ["doc_id", "wtype", "target_uri", "refers_to_uri",
-            "payload_sha256"]
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                rows = []
-                # revisit rows captured OFF the raw record stream (the
-                # response walk skips them), exactly as
-                # _scan_typed_records would extract them; bounded — the
-                # reference plane is a sliver of the response plane
-                side: list[tuple] = []
-
-                def _records(path=path, side=side):
-                    with open(path, "rb") as f:
-                        for member in iter_gzip_members_stream(f, path):
-                            for rec in decode_warc_bytes(
-                                    member, path, with_headers=True):
-                                wh = rec[4]
-                                if (wh.get(b"warc-type", b"")
-                                        .strip().lower() == b"revisit"):
-                                    ref_uri, _rid, dig, _prof = \
-                                        _revisit_row(wh, path, rec[0])
-                                    side.append((rec[0], "revisit",
-                                                 rec[1], ref_uri, dig))
-                                yield rec
-
-                for d, u, _n, block, wh in _walk_response_records(
-                        _records(), path):
-                    st, hh, body, _k = parse_http_response_ex(block, path)
-                    digest, _verified = _payload_digest_verdict(
-                        wh, body, path, d)
-                    rows.append((d, "response", u, None, digest))
-                    if len(rows) >= _SCAN_BATCH_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-                rows.extend(side)
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(_dec, schema)
-
-
-def _revisit_resolution_rows(payload: bytes, where: str):
-    """The fused walk of :func:`read_warc_revisit_resolution` over ONE
-    shard's bytes — shared by the Spark reader's task body and the fuzz
-    wrapper so the soak exercises the exact code the reader runs."""
-    side: list[tuple] = []
-
-    def _records():
-        for member in split_gzip_members(payload, where):
-            for rec in decode_warc_bytes(member, where, with_headers=True):
-                wh = rec[4]
-                if (wh.get(b"warc-type", b"")
-                        .strip().lower() == b"revisit"):
-                    ref_uri, _rid, dig, _prof = _revisit_row(
-                        wh, where, rec[0])
-                    side.append((rec[0], "revisit", rec[1], ref_uri, dig))
-                yield rec
-
-    rows = []
-    for d, u, _n, block, wh in _walk_response_records(_records(), where):
-        st, hh, body, _k = parse_http_response_ex(block, where)
-        digest, _verified = _payload_digest_verdict(wh, body, where, d)
-        rows.append((d, "response", u, None, digest))
-    return rows + side
-
-
-def try_scan_warc_revisit_resolution(payload: bytes):
-    """Fuzz-contract wrapper over the fused revisit-resolution walk:
-    the union rows, or None on any framing defect — never raises."""
-    try:
-        return _revisit_resolution_rows(payload, "<bytes>")
-    except ValueError:
-        return None
-
-
-def _scan_typed_records(spark: SparkSession, path_glob: str,
-                        wtype: bytes, row_fn, schema, cols) -> DataFrame:
-    """The typed-plane scan both the revisit and the request readers
-    are: shard-path listing → streaming member walk (O(member) memory,
-    shard-size-independent) → keep records of ONE WARC-Type → one
-    ``row_fn`` row each, flowing out in bounded Arrow batches. Factored
-    so a fix to the shared walk (batching, path handling) lands in one
-    place — the same same-side-drift argument as the HTTP framing
-    helpers."""
-    files = _shard_paths_df(spark, path_glob)
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                rows = []
-                with open(path, "rb") as f:
-                    for member in iter_gzip_members_stream(f, path):
-                        for d, u, _n, block, wh in decode_warc_bytes(
-                                member, path, with_headers=True):
-                            if (wh.get(b"warc-type", b"")
-                                    .strip().lower() != wtype):
-                                continue
-                            rows.append(row_fn(d, u, block, wh, path))
-                            if len(rows) >= _SCAN_BATCH_ROWS:
-                                yield pd.DataFrame(rows, columns=cols)
-                                rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(_dec, schema)
+    revisit rows run the same :func:`_revisit_row` extraction the
+    revisit reader runs (malformed known-label digests raise), all off
+    one pass of :func:`_records`. Map-only, one task per shard,
+    O(member) memory."""
+    return _scan(_shard_paths_df(spark, path_glob), "resolution",
+                 _RESOLUTION_SCHEMA)
 
 
 def read_warc_requests(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -2064,24 +1899,8 @@ def read_warc_requests(spark: SparkSession, path_glob: str) -> DataFrame:
     one task per shard, streaming member walk (per-task memory
     O(member)); the response/revisit/meta readers SKIP request
     records, so the scans partition the record stream cleanly."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("method", StringType(), True),
-            StructField("request_target", StringType(), True),
-            StructField("http_version", StringType(), True),
-            StructField("user_agent", StringType(), True),
-            StructField("body_len", LongType(), True),
-            StructField("n_chunks", LongType(), True),
-            StructField("concurrent_to", StringType(), True),
-        ]
-    )
-    cols = ["doc_id", "target_uri", "method", "request_target",
-            "http_version", "user_agent", "body_len", "n_chunks",
-            "concurrent_to"]
-    return _scan_typed_records(spark, path_glob, b"request",
-                               _request_record_row, schema, cols)
+    return _scan(_shard_paths_df(spark, path_glob), "request",
+                 _REQUEST_SCHEMA)
 
 
 def _local_path_of(uri: str) -> str:
@@ -2140,11 +1959,12 @@ def write_wat_sidecar(spark: SparkSession, warc_dir: str) -> None:
                 local = _local_path_of(path)
                 out = local[: -len(".warc.gz")] + ".wat.jsonl"
                 n = 0
-                with open(out, "w") as sink:
-                    for d, u, _n, block, _wh in _iter_file_responses(
-                            path):
+                with open(local, "rb") as f, open(out, "w") as sink:
+                    for wtype, d, u, _n, block, _wh in _records(f, local):
+                        if wtype != b"response":
+                            continue
                         st, hh, body, _k = parse_http_response_ex(
-                            block, path)
+                            block, local)
                         text = _entity_text(body, hh)
                         meta = {
                             "doc_id": d,
@@ -2170,18 +1990,10 @@ def write_wat_sidecar(spark: SparkSession, warc_dir: str) -> None:
         _emit, "n_records long").agg(F.sum("n_records")).collect()
 
 
-_WAT_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), True),
-        StructField("target_uri", StringType(), True),
-        StructField("http_status", LongType(), True),
-        StructField("content_length", LongType(), True),
-        StructField("payload_sha256", StringType(), True),
-        StructField("title", StringType(), True),
-        StructField("n_links", LongType(), True),
-        StructField("text_md5", StringType(), True),
-    ]
-)
+_WAT_SCHEMA = _schema(
+    "doc_id long, target_uri string, http_status long, "
+    "content_length long, payload_sha256 string, title string, "
+    "n_links long, text_md5 string")
 
 
 def read_wat(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -2207,23 +2019,13 @@ def read_warc_gz_stream(spark: SparkSession, path_glob: str,
     projected, so column pruning keeps shard CONTENT out of the JVM
     entirely (binaryFile reads the bytes only when ``content`` is in
     the required schema); the Python workers then stream each landed
-    shard through :func:`_iter_file_responses`, the same O(member +
+    shard through :func:`_scan`, over the same O(member +
     chunk) walker the batch readers use. Before r14 this tail
     materialized whole shards JVM-side via the ``content`` column —
     the exact form the r13 8M-doc rehearsal proved OOMs an 8 GiB heap
     at 452 MB shards; a fat shard arriving on the LANDING path was the
     same OOM waiting. Per-task memory is now shard-size-independent on
     both paths. Local-filesystem contract as :func:`_shard_paths_df`."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("http_status", LongType(), True),
-            StructField("n_chunks", LongType(), True),
-            StructField("content_length", LongType(), True),
-            StructField("text", StringType(), True),
-        ]
-    )
     files = (
         spark.readStream.format("binaryFile")
         .schema("path string, modificationTime timestamp, "
@@ -2231,26 +2033,7 @@ def read_warc_gz_stream(spark: SparkSession, path_glob: str,
         .options(**source_options)
         .load(path_glob)
     )
-    cols = ["doc_id", "target_uri", "http_status",
-            "n_chunks", "content_length", "text"]
-
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for uri in pdf["path"]:
-                local = _local_path_of(uri)
-                rows = []
-                for d, u, _n, block, _wh in _iter_file_responses(local):
-                    st, hh, body, k = parse_http_response_ex(
-                        block, local)
-                    rows.append((d, u, st, k, len(body),
-                                 _entity_text(body, hh)))
-                    if len(rows) >= _SCAN_BATCH_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.select("path").mapInPandas(_dec, schema)
+    return _scan(files, "response", _RESPONSE_SCHEMA)
 
 
 def write_warc_dataset(df: DataFrame, out_dir: str, n_files: int = 4) -> None:
@@ -2281,25 +2064,19 @@ def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
     corpora ship .warc.gz); this reader keeps the simple whole-file
     walk — the scale path with the O(member) streaming contract is
     :func:`read_warc_gz`."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("content_length", LongType(), True),
-            StructField("text", StringType(), True),
-        ]
-    )
+    schema = _schema(
+        "doc_id long, target_uri string, content_length long, text string")
     files = spark.read.format("binaryFile").load(path_glob)
 
     def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for path, content in zip(pdf["path"], pdf["content"]):
-                recs = _iter_response_records(bytes(content), path)
+                recs = _assemble(decode_warc_bytes(bytes(content), path),
+                                 path)
                 yield pd.DataFrame(
                     [(d, u, n, body.decode("utf-8"))
-                     for d, u, n, body, _wh in recs],
-                    columns=["doc_id", "target_uri", "content_length",
-                             "text"],
-                )
+                     for t, d, u, n, body, _wh in recs
+                     if t == b"response"],
+                    columns=schema.fieldNames())
 
     return files.select("path", "content").mapInPandas(_dec, schema)

@@ -52,3 +52,33 @@ def test_named_query_entry(engine):
 def test_explain_surface(engine):
     plan = engine.explain(engine.sql("SELECT c_custkey FROM customer WHERE c_custkey = 1"))
     assert "PushedFilters" in plan
+
+
+def test_local_df_rejects_nulls(spark):
+    """local_df's NULL guard raises ValueError, so ``python -O`` cannot
+    strip it the way it strips an ``assert``."""
+    from sql_query_engine_spark.session import local_df
+
+    with pytest.raises(ValueError, match="NULL-free"):
+        local_df(spark, [(1, "a"), (2, None)], "k long, v string")
+
+
+def test_malformed_spark_graft_conf_raises(monkeypatch):
+    """A SPARK_GRAFT_CONF item without ``=`` is rejected by name, not
+    silently dropped; empty items (a trailing ``;``) stay allowed."""
+    from sql_query_engine_spark.session import get_spark
+
+    monkeypatch.setenv("SPARK_GRAFT_CONF",
+                       "spark.sql.adaptive.enabled;")
+    with pytest.raises(ValueError, match="'spark.sql.adaptive.enabled'"):
+        get_spark("malformed-conf")
+
+
+def test_non_integer_spark_graft_cpus_raises(monkeypatch):
+    """A non-integer SPARK_GRAFT_CPUS is rejected, not ignored in
+    favour of the machine's core count."""
+    from sql_query_engine_spark.session import default_parallelism
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "four")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        default_parallelism()

@@ -658,13 +658,14 @@ def test_warc_roundtrip_and_framing_defects(spark, tmp_path):
     docs = [(1, "hello world"), (2, "héllo — ünïcode ☃"), (3, "")]
     data = write_warc_bytes(docs)
     recs = decode_warc_bytes(data)
-    assert [(d, u, n) for d, u, n, _ in recs] == [
+    assert [(d, u, n) for d, u, n, _b, _wh in recs] == [
         (1, "http://example.com/doc/1", 11),
         (2, "http://example.com/doc/2",
          len("héllo — ünïcode ☃".encode())),
         (3, "http://example.com/doc/3", 0),
     ]
-    assert [b.decode() for *_, b in recs] == [t for _, t in docs]
+    assert [b.decode() for _d, _u, _n, b, _wh in recs] == [
+        t for _, t in docs]
 
     with _pytest.raises(ValueError):
         decode_warc_bytes(b"HTTP/1.0\r\n" + data[10:])   # bad version
@@ -1124,6 +1125,8 @@ def test_warc_segment_reassembly(spark, tmp_path):
     text, framing counts, and payload-digest verdicts identical to the
     unsegmented write — and every reassembly defect raises
     attributably."""
+    import io
+
     import pytest as _pytest
 
     from sql_query_engine_spark.sources.warc import (
@@ -1133,8 +1136,11 @@ def test_warc_segment_reassembly(spark, tmp_path):
         split_gzip_members,
         write_warc_gz_dataset,
         gzip_member,
-        _iter_gz_responses,
+        _records,
     )
+
+    def _walk(stream, where):
+        return _records(io.BytesIO(stream), where)
 
     docs = [(d, f"segmented doc {d} — body {'x' * d}") for d in range(1, 13)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
@@ -1177,24 +1183,24 @@ def test_warc_segment_reassembly(spark, tmp_path):
     members = _segment_members(
         6, http, orig, hashlib.sha256(ent).hexdigest())
     ok = b"".join(members)
-    got = list(_iter_gz_responses(ok, "<ok>"))
-    assert len(got) == 1 and got[0][3] == http
+    got = list(_walk(ok, "<ok>"))
+    assert len(got) == 1 and got[0][0] == b"response" and got[0][4] == http
 
     # stream ends mid-chain → truncated
     with _pytest.raises(ValueError, match="ends inside segmented"):
-        list(_iter_gz_responses(b"".join(members[:2]), "<trunc>"))
+        list(_walk(b"".join(members[:2]), "<trunc>"))
     # a continuation with no open segment
     with _pytest.raises(ValueError, match="without an open"):
-        list(_iter_gz_responses(members[1] + members[2], "<orphan>"))
+        list(_walk(members[1] + members[2], "<orphan>"))
     # out-of-order: segments 1,3 (2 missing)
     with _pytest.raises(ValueError, match="out of order"):
-        list(_iter_gz_responses(members[0] + members[2], "<gap>"))
+        list(_walk(members[0] + members[2], "<gap>"))
     # interleaving record inside an open chain
     from sql_query_engine_spark.sources.warc import build_warc_record
 
     plain = gzip_member(build_warc_record(7, "interloper"))
     with _pytest.raises(ValueError, match="interleaves"):
-        list(_iter_gz_responses(
+        list(_walk(
             members[0] + plain + members[1] + members[2], "<mix>"))
     # total-length lie: shave a byte off the last segment's declaration
     bad_last = split_gzip_members(members[2], "<m>")[0]
@@ -1203,7 +1209,7 @@ def test_warc_segment_reassembly(spark, tmp_path):
         b"WARC-Segment-Total-Length: " + str(len(http) - 1).encode())
     assert lied != bad_last
     with _pytest.raises(ValueError, match="Total-Length"):
-        list(_iter_gz_responses(
+        list(_walk(
             members[0] + members[1] + gzip_member(lied), "<lie>"))
 
 
@@ -1950,7 +1956,8 @@ def test_warc_cdx_extent_fuzz(spark, tmp_path):
         members = split_gzip_members(raw, "fuzz")
         if len(members) != 1:
             raise ValueError("extent holds != 1 member")
-        for _d, _u, _n, block in decode_warc_bytes(members[0], "fuzz"):
+        for _d, _u, _n, block, _wh in decode_warc_bytes(members[0],
+                                                         "fuzz"):
             parse_http_response(block, "fuzz")
         return True
 
@@ -2017,13 +2024,15 @@ def test_warc_single_segment_chain_closes(spark):
     the NEXT unrelated record raised 'interleaves an open segmented
     record', blaming the wrong record. A total that disagrees with the
     block still raises, on the RIGHT record."""
+    import io
+
     import pytest as _pytest
 
     from sql_query_engine_spark.sources.warc import (
         build_http_response,
         build_warc_record,
         gzip_member,
-        _iter_gz_responses,
+        _records,
     )
 
     ent = "single-segment body — ☃".encode()
@@ -2039,8 +2048,8 @@ def test_warc_single_segment_chain_closes(spark):
         8, payload=build_http_response(b"plain follower", 8),
         content_type=b"application/http;msgtype=response")
     stream = gzip_member(single) + gzip_member(plain)
-    got = {d: block for d, _u, _n, block, _wh in
-           _iter_gz_responses(stream, "<single-seg>")}
+    got = {d: block for _t, d, _u, _n, block, _wh in
+           _records(io.BytesIO(stream), "<single-seg>")}
     assert set(got) == {7, 8}, "follower must not be blamed for a chain"
     assert got[7] == http
 
@@ -2054,7 +2063,7 @@ def test_warc_single_segment_chain_closes(spark):
         ])
     with _pytest.raises(ValueError,
                         match="WARC-Segment-Total-Length"):
-        list(_iter_gz_responses(gzip_member(bad), "<single-seg>"))
+        list(_records(io.BytesIO(gzip_member(bad)), "<single-seg>"))
 
 
 def test_cached_fixture_writer_edit_rebuilds(tmp_path):
@@ -2350,3 +2359,134 @@ def test_http_framing_token_strictness():
         with pytest.raises(ValueError, match="Content-Length"):
             parse_http_request_ex(
                 b"POST /x HTTP/1.1\r\nContent-Length: " + cl + b"\r\n\r\nabc")
+
+
+def _warc_planes():
+    """(fuzz wrapper, Spark reader) per plane of the shared record walk."""
+    from sql_query_engine_spark.sources import warc
+
+    return [
+        (warc.try_scan_warc_gz, warc.read_warc_gz),
+        (warc.try_scan_warc_gz_meta, warc.read_warc_gz_meta),
+        (warc.try_scan_warc_revisits, warc.read_warc_revisits),
+        (warc.try_scan_warc_requests, warc.read_warc_requests),
+        (warc.try_scan_warc_revisit_resolution,
+         warc.read_warc_revisit_resolution),
+    ]
+
+
+def test_warc_plane_parity_wrapper_equals_reader(spark, tmp_path):
+    """Every fuzz wrapper returns exactly its reader's rows: one shard
+    carrying revisits, segmented chains, rotated charsets and request
+    records, scanned by each plane's ``try_scan_*`` over the shard's
+    bytes and by its Spark reader over the shard's path, must give the
+    same multiset of rows."""
+    from collections import Counter
+
+    from sql_query_engine_spark.sources.warc import (
+        try_scan_warc_revisit_resolution,
+        write_warc_gz_dataset,
+    )
+
+    docs = [(d, f"plane parity doc {d} — ünïcode ☃ {'y' * (d % 7)}")
+            for d in range(1, 31)]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    out = str(tmp_path / "warc_planes")
+    write_warc_gz_dataset(df, out, n_files=1, charsets=True,
+                          revisits=True, segments=4, requests=True)
+    shard = (tmp_path / "warc_planes" / "part-00000.warc.gz").read_bytes()
+
+    for try_scan, read in _warc_planes():
+        want = Counter(tuple(r) for r in
+                       read(spark, f"{out}/*.warc.gz").collect())
+        got = try_scan(shard)
+        assert got is not None, try_scan.__name__
+        assert want and Counter(got) == want, try_scan.__name__
+    resolved = Counter(r[1] for r in try_scan_warc_revisit_resolution(shard))
+    assert resolved == {"response": 30, "revisit": 3}
+
+
+def test_warc_broken_chain_rejected_by_every_plane(spark, tmp_path):
+    """A broken segment chain rejects the file on EVERY plane — the
+    wrapper returns None and the reader raises — including the revisit
+    and request planes, which read records the chain does not touch
+    but share the one walk that validates it."""
+    import hashlib
+
+    import pytest as _pytest
+
+    from sql_query_engine_spark.sources.warc import (
+        _request_body,
+        _segment_members,
+        build_http_request,
+        build_http_response,
+        build_warc_record,
+        gzip_member,
+    )
+
+    ent = b"broken chain entity"
+    chain = _segment_members(
+        6, build_http_response(ent, 6),
+        b"<urn:uuid:00000000-0000-0000-0000-000000000006>",
+        hashlib.sha256(ent).hexdigest())
+    request = gzip_member(build_warc_record(
+        5, payload=build_http_request(5), warc_type=b"request",
+        content_type=b"application/http;msgtype=request",
+        payload_digest=hashlib.sha256(_request_body(5)).hexdigest()))
+    revisit = gzip_member(build_warc_record(
+        7, payload=b"HTTP/1.1 200 OK\r\n\r\n", warc_type=b"revisit",
+        payload_digest=hashlib.sha256(b"x").hexdigest(),
+        extra_headers=[(b"WARC-Refers-To-Target-URI",
+                        b"http://example.com/doc/7")]))
+    d = tmp_path / "warc_broken_chain"
+    d.mkdir()
+    good = request + b"".join(chain) + revisit
+    broken = request + chain[0] + chain[2] + revisit  # segment 2 missing
+    for try_scan, _read in _warc_planes():
+        assert try_scan(good), try_scan.__name__
+    (d / "part-00000.warc.gz").write_bytes(broken)
+    for try_scan, read in _warc_planes():
+        assert try_scan(broken) is None, try_scan.__name__
+        with _pytest.raises(Exception, match="out of order"):
+            read(spark, str(d) + "/*.warc.gz").collect()
+
+
+def test_record_walk_streams_one_member_at_a_time():
+    """The O(member) memory contract of the shared walk: ``_records``
+    yields the first record after reading at most one read chunk plus
+    the first member, never the whole shard — also when that member is
+    larger than a chunk."""
+    import inspect
+    import io
+    import random
+
+    from sql_query_engine_spark.sources.warc import (
+        _records,
+        build_warc_record,
+        gzip_member,
+        iter_gzip_members_stream,
+    )
+
+    chunk = inspect.signature(
+        iter_gzip_members_stream).parameters["chunk"].default
+    rng = random.Random(7)
+    sizes = [chunk * 2 + 123] + [64 * 1024] * 30
+    members = [gzip_member(build_warc_record(d, payload=rng.randbytes(n)))
+               for d, n in enumerate(sizes)]
+    shard = b"".join(members)
+    assert len(shard) > 4 * chunk
+
+    class CountingReader(io.BytesIO):
+        n_read = 0
+
+        def read(self, n=-1):
+            out = super().read(n)
+            self.n_read += len(out)
+            return out
+
+    f = CountingReader(shard)
+    walk = _records(f, "<counted>")
+    assert next(walk)[1] == 0
+    assert f.n_read <= chunk + len(members[0]), f.n_read
+    assert [r[1] for r in walk] == list(range(1, len(sizes)))
+    assert f.n_read == len(shard)

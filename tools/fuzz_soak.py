@@ -337,10 +337,10 @@ for i in range(NT):
         same = (_decdig("sha256", new_val) == _decdig("sha256", orig_val)
                 and _decdig("sha256", new_val) is not None)
         if same:
-            ok = out is not None and all(r[3] is True for r in out)
+            ok = out is not None and all(r[7] is True for r in out)
         else:
             ok = (out is None
-                  or any(r[3] is False for r in out))
+                  or any(r[7] is False for r in out))
     else:
         tag = b"X-Payload-SHA256: "
         start = _httpCH.index(tag) + len(tag)

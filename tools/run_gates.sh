@@ -7,6 +7,12 @@ cd "$(dirname "$0")/.."
 echo "=== pytest ==="
 python -m pytest tests/ -q
 
+echo "=== fuzz soak (bounded) ==="
+# every decoder and fuzz wrapper under 20k seeded mutations plus the
+# gzip-seam, digest-flip and CDX-extent passes; exits 1 on any crash,
+# silent digest accept or short extent row
+python tools/fuzz_soak.py 20000 0x5EED
+
 echo "=== oracle fragility lint ==="
 # static scan for version-fragile oracle constructs (INTERVAL
 # arithmetic, rounded double division, exp, nondeterminism) — the
